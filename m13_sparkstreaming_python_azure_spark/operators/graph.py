@@ -1022,7 +1022,8 @@ def k_truss(
         )
         # the returned plan re-reads the LAST round's ``support``, whose
         # subtree reads that round's pre-peel ek — so only the ek two
-        # generations back is provably dead here
-        release_local_checkpoint(stale)
+        # generations back is provably dead here (none in the first round)
+        if stale is not None:
+            release_local_checkpoint(stale)
         stale, ek = ek, nxt
     return ek.join(support, ["a", "b"]).select("a", "b", "support")

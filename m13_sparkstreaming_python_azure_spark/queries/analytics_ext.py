@@ -1638,27 +1638,18 @@ def q_streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.event_id").alias("click_id"),
     )
     name = f"souter_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # 2 partitions: a stream-stream join carries FOUR state stores per
-    # partition, so per-batch commit cost scales with the partition
-    # count; the replay fixture is tiny and the aggregate output is
-    # partitioning-independent (r9 floor shave, rows verified equal)
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .start()
-        )
+    q = (
+        joined.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", ck)
+        .start()
+    )
+    q.processAllAvailable()
+    for ch in chunks[1:] + sentinels:
+        publish_chunk(ch, land)
         q.processAllAvailable()
-        for ch in chunks[1:] + sentinels:
-            publish_chunk(ch, land)
-            q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    q.stop()
     return (
         spark.table(name)
         .filter(F.col("purchase_id") >= 0)
@@ -1762,27 +1753,18 @@ def q_streaming_full_outer_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.event_id").alias("click_id"),
     )
     name = f"sfo_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # 2 partitions: a stream-stream join carries FOUR state stores per
-    # partition, so per-batch commit cost scales with the partition
-    # count; the replay fixture is tiny and the aggregate output is
-    # partitioning-independent (r9 floor shave, rows verified equal)
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .start()
-        )
+    q = (
+        joined.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", ck)
+        .start()
+    )
+    q.processAllAvailable()
+    for ch in [chunks[1].unionAll(dup)] + chunks[2:] + sentinels:
+        publish_chunk(ch, land)
         q.processAllAvailable()
-        for ch in [chunks[1].unionAll(dup)] + chunks[2:] + sentinels:
-            publish_chunk(ch, land)
-            q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    q.stop()
     return (
         spark.table(name)
         .filter(

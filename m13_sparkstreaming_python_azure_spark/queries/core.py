@@ -1215,22 +1215,14 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r.event_id").alias("click_id"),
     )
     name = f"ssj_gate_{uuid.uuid4().hex[:8]}"
-    # a stream-stream join keeps 4 state-store instances per shuffle
-    # partition per batch; at this volume 8 partitions bound the state
-    # bookkeeping, not the data — restore the session width afterwards
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    q = (
+        joined.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
     return (
         spark.table(name)
         .groupBy("purchase_date")
@@ -1280,19 +1272,14 @@ def q_streaming_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id"),
     )
     name = f"sssj_gate_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    q = (
+        joined.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
     return (
         spark.table(name)
         .groupBy("purchase_date")

@@ -978,24 +978,17 @@ def q_streaming_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks = [emb.filter(F.col("vec_id") % 3 == i) for i in range(3)]
     publish_chunk(chunks[0], land)
     stream = parquet_file_stream(spark, land, emb.schema)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # 8 partitions: the per-batch index append writes cell-pure files;
-    # 32 shuffle partitions at gate batch sizes are task overhead only
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(ivf_index_sink(idx, n_cells=8))
-            .queryName(f"annidx_{uuid.uuid4().hex[:8]}")
-            .option("checkpointLocation", ck)
-            .start()
-        )
+    q = (
+        stream.writeStream.foreachBatch(ivf_index_sink(idx, n_cells=8))
+        .queryName(f"annidx_{uuid.uuid4().hex[:8]}")
+        .option("checkpointLocation", ck)
+        .start()
+    )
+    q.processAllAvailable()
+    for ch in chunks[1:]:
+        publish_chunk(ch, land)
         q.processAllAvailable()
-        for ch in chunks[1:]:
-            publish_chunk(ch, land)
-            q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    q.stop()
     probes = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -1259,27 +1252,19 @@ def q_streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     publish_chunk(chunks[0], land)
     stream = parquet_file_stream(spark, land, docs.schema)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # the foreachBatch body runs probe joins + snapshot writes per
-    # micro-batch: at gate batch sizes, 32 shuffle partitions are pure
-    # task overhead (r9 floor shave; output partitioning-independent)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.writeStream.foreachBatch(
-                streaming_minhash_dedup_sink(corpus, bands, shingles)
-            )
-            .queryName(f"mhdedup_{uuid.uuid4().hex[:8]}")
-            .option("checkpointLocation", ck)
-            .start()
+    q = (
+        stream.writeStream.foreachBatch(
+            streaming_minhash_dedup_sink(corpus, bands, shingles)
         )
+        .queryName(f"mhdedup_{uuid.uuid4().hex[:8]}")
+        .option("checkpointLocation", ck)
+        .start()
+    )
+    q.processAllAvailable()
+    for ch in chunks[1:]:
+        publish_chunk(ch, land)
         q.processAllAvailable()
-        for ch in chunks[1:]:
-            publish_chunk(ch, land)
-            q.processAllAvailable()
-        q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    q.stop()
     return read_snapshot(spark, corpus).select("doc_id")
 
 

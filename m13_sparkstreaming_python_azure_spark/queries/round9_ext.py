@@ -36,6 +36,7 @@ def q_streaming_transform_with_state(
 
     from m13_sparkstreaming_python_azure_spark.session import (
         _ensure_vendored_protobuf,
+        state_partitions,
     )
     from m13_sparkstreaming_python_azure_spark.sources.filestream import (
         parquet_file_stream,
@@ -67,7 +68,7 @@ def q_streaming_transform_with_state(
     name = f"tws_{uuid.uuid4().hex[:8]}"
     confs = {
         **rocksdb_state_conf(),
-        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.shuffle.partitions": str(state_partitions(spark)),
     }
     before = {k: spark.conf.get(k, None) for k in confs}
     for k, v in confs.items():

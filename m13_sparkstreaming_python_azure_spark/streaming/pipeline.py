@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from m13_sparkstreaming_python_azure_spark.session import stateful_stream_width
 from m13_sparkstreaming_python_azure_spark.sources.filestream import parquet_file_stream
 
 
@@ -30,6 +31,16 @@ class StreamingAggPipeline:
     ``transform`` maps the raw streaming DataFrame to the aggregate —
     identical code runs on a batch DataFrame (streaming/batch parity is the
     core invariant of the reference workload, SURVEY.md §5.3).
+
+    State width: the aggregate keeps one state store per shuffle
+    partition, loaded and committed on every micro-batch, so the stream
+    starts at ``session.state_partitions`` width — 1 on a local master,
+    the session's ``spark.sql.shuffle.partitions`` on any other — and the
+    session width is restored as soon as the query has started; reads of
+    the sink run at the session width. A checkpoint records the width of
+    its first start and every restart keeps it, so the rule applies to
+    new checkpoints only: a ``checkpoint_location`` first written at 8
+    partitions stays at 8.
     """
 
     def __init__(
@@ -75,19 +86,31 @@ class StreamingAggPipeline:
     def start(self) -> StreamingQuery:
         """Continuous micro-batch mode — the reference's deployment shape
         (default trigger; memory sink registered as a SQL temp table)."""
-        self.query = self._writer(self.streaming_aggregate()).start()
+        with stateful_stream_width(self.spark):
+            self.query = self._writer(self.streaming_aggregate()).start()
         return self.query
 
     def run_available_now(self, timeout: int = 300) -> DataFrame:
         """Process everything currently in the source dir, then stop
-        (deterministic quiesce for tests/goldens). Returns the sink table."""
-        q = (
-            self._writer(self.streaming_aggregate())
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout)
-        self.query = q
+        (deterministic quiesce for tests/goldens). Returns the sink table.
+
+        Raises ``TimeoutError`` (after stopping the query, chained to its
+        error if it had one) when the run has not finished within
+        ``timeout`` seconds: the sink would hold a partial aggregate. A
+        query that died raises its ``StreamingQueryException`` from the
+        wait itself."""
+        with stateful_stream_width(self.spark):
+            self.query = (
+                self._writer(self.streaming_aggregate())
+                .trigger(availableNow=True)
+                .start()
+            )
+        if not self.query.awaitTermination(timeout):
+            self.query.stop()
+            raise TimeoutError(
+                f"availableNow run of {self.query_name!r} did not finish "
+                f"within {timeout} s"
+            ) from self.query.exception()
         return self.table()
 
     def table(self) -> DataFrame:

@@ -11,7 +11,8 @@ precision properties the r11 rotation relied on:
 - the real registry: every gate's fingerprint is computable and the
   known dependency shapes hold (the 13 global_rank/global_cumsum
   dependents reach _bucket_assignment; streaming wrapper gates carry
-  the shallow _narrow_shuffle entry instead of a whole-package chase).
+  the shallow _narrow_shuffle entry instead of a whole-package chase,
+  plus the state-width rule it imports).
 """
 
 from __future__ import annotations
@@ -22,7 +23,12 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
-from rotate_registry import PKG, Closure, gate_fingerprints  # noqa: E402
+from rotate_registry import (  # noqa: E402
+    PKG,
+    Closure,
+    gate_closure,
+    gate_fingerprints,
+)
 
 
 def _closure_of(gate_name: str):
@@ -61,6 +67,22 @@ def test_wrapped_gates_fingerprint_narrow_shuffle_shallowly():
     c = Closure().closure(inner.__module__, inner.__qualname__.split(".")[0])
     # the gate's own closure must stay well under whole-package size
     assert len(c) < 200, len(c)
+
+
+def test_state_width_rule_reaches_every_gate_it_sizes():
+    """A change to the engine's state-width rule must drift every gate
+    whose streams it sizes: the wrapped gates through the inline import
+    in _narrow_shuffle, streaming_daily_stats through
+    StreamingAggPipeline, streaming_transform_with_state directly."""
+    from m13_sparkstreaming_python_azure_spark.queries import registry
+
+    cl = Closure()
+    rule = f"{PKG}.session:state_partitions"
+    sized = [*registry._STREAMING_GATES, "streaming_transform_with_state"]
+    for gate in sized:
+        assert rule in gate_closure(cl, gate, registry.QUERIES[gate]), gate
+    for gate in ("pricing_summary", "snapshot_commit_group"):
+        assert rule not in gate_closure(cl, gate, registry.QUERIES[gate])
 
 
 def test_oracle_sql_changes_the_fingerprint():

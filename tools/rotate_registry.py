@@ -123,6 +123,18 @@ _INLINE_FROM = re.compile(
 )
 
 
+def _inline_imports(src: str) -> dict[str, tuple[str, str]]:
+    """name → (module, name) for each `from pkg.x import a, b` inside a
+    def body."""
+    inline: dict[str, tuple[str, str]] = {}
+    for m in _INLINE_FROM.finditer(src):
+        names_blob = m.group(2) or m.group(3) or ""
+        for nm in re.split(r"[\s,]+", names_blob.strip()):
+            if nm and nm != "as":
+                inline[nm] = (m.group(1), nm)
+    return inline
+
+
 class Closure:
     def __init__(self) -> None:
         self.modules: dict[str, _Module] = {}
@@ -169,14 +181,7 @@ class Closure:
         if key in seen:
             return
         seen[key] = _sha(src)
-        # inline `from pkg.x import a, b` inside the def body
-        inline: dict[str, tuple[str, str | None]] = {}
-        for m in _INLINE_FROM.finditer(src):
-            tgt = m.group(1)
-            names_blob = m.group(2) or m.group(3) or ""
-            for nm in re.split(r"[\s,]+", names_blob.strip()):
-                if nm and nm != "as":
-                    inline[nm] = (tgt, nm)
+        inline = _inline_imports(src)
         words = set(re.findall(r"[A-Za-z_][A-Za-z0-9_]*", src))
         for w in words:
             if w == name:
@@ -190,6 +195,45 @@ class Closure:
                 self._visit(modname, w, seen)
 
 
+def gate_closure(cl: Closure, gate: str, fn) -> dict[str, str]:
+    """{qualified name: source sha} of everything registry entry ``gate``
+    (callable ``fn``) runs: its own closure, the streaming wrapper's, and
+    the lazy oracle generators."""
+    from m13_sparkstreaming_python_azure_spark.queries import registry
+
+    wrapped = getattr(fn, "__wrapped__", None)
+    inner = wrapped or fn
+    base = cl.closure(inner.__module__, inner.__qualname__.split(".")[0])
+    if wrapped is not None:
+        # _narrow_shuffle wrapper logic is code too — but hash its OWN
+        # source only: running the word-scan closure on it would chase
+        # the word "QUERIES" in a comment into the registry's
+        # _ALL_QUERIES dict and from there into the entire package,
+        # making every wrapped gate's fingerprint cover everything. The
+        # engine helpers it imports in its body (the state-width rule)
+        # are followed, so a change to the rule drifts every gate it
+        # sizes.
+        src = cl.module(registry.__name__).defs.get("_narrow_shuffle", "")
+        base[f"{registry.__name__}:_narrow_shuffle~shallow"] = _sha(src)
+        for tgt_mod, tgt_name in _inline_imports(src).values():
+            base.update(cl.closure(tgt_mod, tgt_name))
+    if gate in ("multimodal_features", "multimodal_phash_dedup"):
+        # lazy oracle: the generator function is the oracle's code
+        base.update(cl.closure(
+            f"{PKG}.queries.llm", "multimodal_oracle_values"
+        ))
+    if gate == "bpe_merges":
+        # ADVICE r11: before this explicit branch the lazy VALUES
+        # oracle joined the fingerprint only because the gate's
+        # docstring happened to mention bpe_oracle_values — a
+        # docstring rewording would have silently dropped the
+        # oracle side (the drift class this tool exists to catch)
+        base.update(cl.closure(
+            f"{PKG}.queries.analytics_ext", "bpe_oracle_values"
+        ))
+    return base
+
+
 def gate_fingerprints() -> tuple[dict[str, str], list[str]]:
     """gate → fingerprint, plus the current prefix-50 (imports registry)."""
     from m13_sparkstreaming_python_azure_spark.queries import registry
@@ -197,35 +241,8 @@ def gate_fingerprints() -> tuple[dict[str, str], list[str]]:
     cl = Closure()
     fps: dict[str, str] = {}
     for gate, fn in registry.QUERIES.items():
-        wrapped = getattr(fn, "__wrapped__", None)
-        inner = wrapped or fn
-        parts = []
-        base = cl.closure(inner.__module__, inner.__qualname__.split(".")[0])
-        if wrapped is not None:
-            # _narrow_shuffle wrapper logic is code too — but hash its
-            # OWN source only: running the word-scan closure on it would
-            # chase the word "QUERIES" in a comment into the registry's
-            # _ALL_QUERIES dict and from there into the entire package,
-            # making every wrapped gate's fingerprint cover everything
-            reg_mod = cl.module(registry.__name__)
-            base[f"{registry.__name__}:_narrow_shuffle~shallow"] = _sha(
-                reg_mod.defs.get("_narrow_shuffle", "")
-            )
-        if gate in ("multimodal_features", "multimodal_phash_dedup"):
-            # lazy oracle: the generator function is the oracle's code
-            base.update(cl.closure(
-                f"{PKG}.queries.llm", "multimodal_oracle_values"
-            ))
-        if gate == "bpe_merges":
-            # ADVICE r11: before this explicit branch the lazy VALUES
-            # oracle joined the fingerprint only because the gate's
-            # docstring happened to mention bpe_oracle_values — a
-            # docstring rewording would have silently dropped the
-            # oracle side (the drift class this tool exists to catch)
-            base.update(cl.closure(
-                f"{PKG}.queries.analytics_ext", "bpe_oracle_values"
-            ))
-        parts.extend(f"{k}={v}" for k, v in sorted(base.items()))
+        base = gate_closure(cl, gate, fn)
+        parts = [f"{k}={v}" for k, v in sorted(base.items())]
         parts.append("oracle=" + _sha(registry.ORACLES.get(gate, "")))
         fps[gate] = _sha("\n".join(parts))
     return fps, list(registry._PRIORITY_50)
@@ -236,6 +253,10 @@ def main(argv: list[str]) -> int:
     defer = {argv[i + 1] for i, a in enumerate(argv) if a == "--defer"}
     fps, head = gate_fingerprints()
     files = package_files()
+    from m13_sparkstreaming_python_azure_spark.queries import registry
+
+    # the seeded tail slots re-roll with every package change: name them
+    print("random tail picks: " + ", ".join(head[len(registry._head):]))
 
     old = {}
     if os.path.exists(STAMP_PATH):
