@@ -397,8 +397,9 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
             return first_deg.select(F.col("src").alias("node"), "degree")
         # ``first_deg`` (and the possible return above) reads the
         # PAIR-START ``live``, so only the checkpoint TWO generations
-        # back is provably dead here
-        release_local_checkpoint(stale)
+        # back is provably dead here (none in the first pair-round)
+        if stale is not None:
+            release_local_checkpoint(stale)
         stale, live, n_prev = live, nxt, n
     deg = live.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
     return deg.filter(F.col("degree") >= k).select(

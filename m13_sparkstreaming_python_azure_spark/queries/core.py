@@ -29,6 +29,7 @@ from m13_sparkstreaming_python_azure_spark.operators.window import (
 from m13_sparkstreaming_python_azure_spark.operators.zorder import (
     zorder_key_orders_sql,
 )
+from m13_sparkstreaming_python_azure_spark.streaming.pipeline import await_query
 
 
 def events_daily(spark: SparkSession, sf_dir: str, approx: bool) -> DataFrame:
@@ -688,7 +689,7 @@ def q_streaming_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFra
     q = write_foreach_batch_histogram(
         stream, sink, ck, "value", ["event_type"], 0.0, 500.0, 100
     ).trigger(availableNow=True).start()
-    q.awaitTermination(300)
+    await_query(q)
     merged = read_merged_histogram(spark, sink, ["event_type"])
     return histogram_quantiles(
         merged, ["event_type"], [0.5, 0.9, 0.99], 0.0, 500.0, 100
@@ -1168,7 +1169,7 @@ def q_streaming_append_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_query(q)
     return spark.table(name).select(
         F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
@@ -1222,7 +1223,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_query(q)
     return (
         spark.table(name)
         .groupBy("purchase_date")
@@ -1279,7 +1280,7 @@ def q_streaming_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_query(q)
     return (
         spark.table(name)
         .groupBy("purchase_date")
@@ -1323,7 +1324,7 @@ def q_streaming_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_query(q)
     from m13_sparkstreaming_python_azure_spark.sources.snapshots import (
         read_snapshot,
     )
@@ -1382,7 +1383,7 @@ def q_streaming_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_query(q)
     return read_snapshot(spark, view).select(
         "event_type",
         "n_rows",
@@ -1580,7 +1581,7 @@ def q_streaming_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_query(q)
     return spark.table(name).select(
         F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
@@ -1638,7 +1639,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_query(q)
     return (
         spark.table(name)
         .groupBy("event_date", "event_type")

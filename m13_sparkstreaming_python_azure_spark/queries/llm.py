@@ -30,6 +30,7 @@ from m13_sparkstreaming_python_azure_spark.operators.text import (
     with_quality_score,
     with_text_stats,
 )
+from m13_sparkstreaming_python_azure_spark.streaming.pipeline import await_query
 
 # DuckDB equivalent of operators.text.tokens(): lowercase, split on
 # whitespace, drop empties.
@@ -1395,7 +1396,7 @@ def q_streaming_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_query(q)
     counts = read_merged_counts(spark, sink, ["source", "token"])
     w_src = Window.partitionBy("source")
     return counts.select(

@@ -175,11 +175,12 @@ ORACLES = {
 # (tools/check_correctness.py) still runs all of them.
 _head = [
     "pricing_summary",  # flagship — must stay first
-    # One state-width rule (session.stateful_stream_width): every stateful
-    # stream the engine starts runs one state store per operator on a
-    # local master — the 23 wrapped gates (six also set their own width
-    # of 8 or 2; those overrides are gone), the transformWithState gate,
-    # and the StreamingAggPipeline gate (streaming_daily_stats):
+    # Replay through Arrow (sources/replay.py): publish_chunk and
+    # replay_dataframe_by_key write one parquet file and publish it by
+    # rename, with no Spark write job; the finite streams of nine gates
+    # now wait through streaming.pipeline.await_query, which stops the
+    # query and raises on timeout. Every streaming gate reaches one or
+    # both:
     "streaming_daily_stats",
     "streaming_transform_with_state",
     "streaming_interval_join",
@@ -204,9 +205,8 @@ _head = [
     "streaming_latest_state",
     "streaming_view_maintenance",
     "streaming_cdc_upsert",
-    # k_truss: the first peeling round has no stale checkpoint to release
-    # (r13: one degree-keyed oriented edge relation shared across rounds):
-    "k_truss",
+    # k_core: the first pair-round has no stale checkpoint to release:
+    "k_core_customers",
     # r13 OPTIMIZATION round 2 carry-over: gates whose implementing code
     # changed in that perf pass.
     # ANN/codebook family — shared scored relation for the IVF recall

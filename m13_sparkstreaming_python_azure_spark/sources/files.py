@@ -1,19 +1,15 @@
-"""Batch file sources & sinks (SURVEY.md §2.1 S1/S2/S4/S7).
+"""Batch file sources & sinks (SURVEY.md §2.1 S1/S2).
 
-The reference reads parquet day-dirs (``upload.py:66``), stamps a
-``processed_date`` (``upload.py:67``) and rewrites them partitioned by
-``year=/month=/day=`` paths built by hand (``upload.py:68-74``). Here the
-path arithmetic is replaced by Spark's own ``partitionBy`` writer, which
-also gives dynamic partition overwrite at scale.
+The reference reads parquet day-dirs (``upload.py:66``); here that is
+Spark's parquet scan with Hive partition discovery, plus the size- and
+layout-tuned writer and the small-file compactor a large table needs.
+The reference's per-day restamp-and-rewrite (``upload.py:67-74``, S4/S7)
+lives in the replay harness (sources/replay.py).
 """
 
 from __future__ import annotations
 
-import datetime as dt
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def read_parquet(spark: SparkSession, path: str, schema=None) -> DataFrame:
@@ -24,30 +20,6 @@ def read_parquet(spark: SparkSession, path: str, schema=None) -> DataFrame:
     if schema is not None:
         reader = reader.schema(schema)
     return reader.parquet(path)
-
-
-def stamp_processed_date(
-    df: DataFrame, when: dt.datetime | None = None, col: str = "processed_date"
-) -> DataFrame:
-    """S7: ingest-time stamp. ``when=None`` → ``current_timestamp()`` (the
-    at-scale idiom); a literal datetime reproduces upload.py:67 exactly."""
-    value = F.current_timestamp() if when is None else F.lit(when)
-    return df.withColumn(col, value)
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_by: Sequence[str] = ("year", "month", "day"),
-    mode: str = "overwrite",
-) -> None:
-    """S4: partitioned parquet sink. ``partitionBy`` to one root replaces the
-    reference's manual ``{out}/year=…/month=…/day=…`` string building."""
-    df.write.mode(mode).partitionBy(*partition_by).parquet(path)
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).parquet(path)
 
 
 def write_parquet_sized(

@@ -25,6 +25,22 @@ from m13_sparkstreaming_python_azure_spark.session import stateful_stream_width
 from m13_sparkstreaming_python_azure_spark.sources.filestream import parquet_file_stream
 
 
+def await_query(query: StreamingQuery, timeout: float = 300) -> None:
+    """Wait for a finite (``trigger(availableNow=True)``) query to finish,
+    so that its sink is complete before anyone reads it.
+
+    A query that died raises its ``StreamingQueryException`` from the
+    wait. A query still running after ``timeout`` seconds is stopped and
+    raises ``TimeoutError``, chained to the query's error if it had one:
+    its sink would hold a partial result."""
+    if not query.awaitTermination(timeout):
+        name = query.name or query.id
+        query.stop()
+        raise TimeoutError(
+            f"availableNow run of {name!r} did not finish within {timeout} s"
+        ) from query.exception()
+
+
 class StreamingAggPipeline:
     """File-arrival stream → aggregation → queryable sink.
 
@@ -94,23 +110,16 @@ class StreamingAggPipeline:
         """Process everything currently in the source dir, then stop
         (deterministic quiesce for tests/goldens). Returns the sink table.
 
-        Raises ``TimeoutError`` (after stopping the query, chained to its
-        error if it had one) when the run has not finished within
-        ``timeout`` seconds: the sink would hold a partial aggregate. A
-        query that died raises its ``StreamingQueryException`` from the
-        wait itself."""
+        Waits through ``await_query``: a run that has not finished within
+        ``timeout`` seconds is stopped and raises ``TimeoutError``, and a
+        query that died raises its ``StreamingQueryException``."""
         with stateful_stream_width(self.spark):
             self.query = (
                 self._writer(self.streaming_aggregate())
                 .trigger(availableNow=True)
                 .start()
             )
-        if not self.query.awaitTermination(timeout):
-            self.query.stop()
-            raise TimeoutError(
-                f"availableNow run of {self.query_name!r} did not finish "
-                f"within {timeout} s"
-            ) from self.query.exception()
+        await_query(self.query, timeout)
         return self.table()
 
     def table(self) -> DataFrame:
